@@ -1,60 +1,29 @@
 """Iterative graph analytics over DataFrames (beyond-reference addition,
 complementing dedup.connected_components).
 
-PageRank with a fixed iteration count: per iteration, every node ships
-rank/out_degree along its out-edges and the destination sums arrivals —
-two keyed shuffles per round, the textbook distributed shape. Lineage is
-truncated each round with localCheckpoint (same guard as
-connected_components) so plan depth stays constant at any iteration count.
+Round rule: pagerank / personalized_pagerank, hits, kcore, bfs_hops and
+sssp end each round with an eager ``localCheckpoint()`` of the frame the
+next round reads — the reference's JobControl chain of dependent jobs,
+each materializing its output before the next one starts. Plan depth
+stays constant at any round count, AQE sizes every stage, and no operator
+touches session conf. Not yet on the rule: label_propagation and
+random_walks still chain their few fixed rounds inside one lazy plan,
+and frames reused several times inside ONE query plan — triangle,
+clustering, assortativity and the Brandes passes — use lazy
+``localCheckpoint(eager=False)``.
 
-A fixed iteration count (rather than convergence detection) keeps the
-result deterministic and lets an external engine replay the exact same
-computation as unrolled CTEs — which is how the oracle checks it.
+Round counts are FIXED bounds rather than convergence tests so the result
+is deterministic and an external engine can replay the exact same
+computation as unrolled CTEs — which is how the oracles check it. bfs_hops
+and sssp also stop early once a round changes nothing, which leaves the
+result unchanged; a caller that wants the converged answer passes a bound
+above the graph's diameter.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-@contextmanager
-def _compiled_rounds(anchor: DataFrame):
-    """Scope for compiling a FIXED-round iterative chain into one job.
-
-    Inside the scope the caller chains rounds with ``persist()`` (cache
-    substitution keeps the logical plan linear in rounds even when a round
-    references its predecessor several times) and materializes the final
-    frame once — instead of an eager ``localCheckpoint`` per round, which
-    under AQE runs every stage driver-synchronously and re-computes
-    non-materialized subtrees at runtime broadcast conversions.
-
-    AQE is disabled for the scope because a persisted frame pins its
-    pre-AQE shuffle layout (the r11 experiment measured persist-chained
-    rounds 2.2x WORSE under a 200-partition plain session for exactly that
-    reason). The fixed partition count is DERIVED, not constant: the
-    anchor frame is an eagerly localCheckpoint-ed input whose layout AQE
-    already coalesced by byte size, so its partition count scales with the
-    data (1-2 locally at sf0.1, thousands at 100 TB) — the same
-    size-adaptive discipline as the registry's derive_k/derive_bucket_dims
-    knobs. Restores both settings on exit; callers must materialize
-    (eager localCheckpoint) before the scope closes so the returned frame
-    never executes under the temporary settings.
-    """
-    spark = anchor.sparkSession
-    npart = max(1, anchor.rdd.getNumPartitions())
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    old_sp = conf.get("spark.sql.shuffle.partitions", "200")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", str(npart))
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.shuffle.partitions", old_sp)
 
 
 def pagerank(
@@ -69,64 +38,13 @@ def pagerank(
     ``edges`` is a directed edge list; every node must have at least one
     out-edge (undirect the graph first if it may have sinks — dangling-mass
     redistribution is deliberately out of scope to keep the computation
-    engine-replayable). Output: (node, rank_pr).
+    engine-replayable). This is :func:`personalized_pagerank` with every
+    node a seed: |S| = n, and the seed-only teleport term is the uniform
+    (1-d)/n, so the ranks are the same doubles. Output: (node, rank_pr).
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    nodes = e.select(F.col("src").alias("node")).union(
-        e.select(F.col("dst").alias("node"))
-    ).distinct().localCheckpoint()
-    n = nodes.count()  # one metadata-scale scalar, like MLlib's initialization
-    base = (1.0 - damping) / n
-    # Fixed-round chain compiled into ONE job (r12): rounds link through
-    # persist() under the AQE-off/derived-partition scope instead of an
-    # eager localCheckpoint per round — see _compiled_rounds.
-    with _compiled_rounds(e):
-        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg")).persist()
-        cached = [outdeg]
-        ranks = nodes.withColumn("rank_pr", F.lit(1.0 / n))
-        for _ in range(iterations):
-            # Contributions accumulate as SCALED BIGINT (x1e15): round(c*1e15)
-            # is the same IEEE double product and the same half-up rounding on
-            # both engines (positive values), the integer sum is exact under
-            # any partial-sum grouping, and per-dst mass <= 1 keeps the scaled
-            # sum under 2^53 so the cast back to double is lossless. (A
-            # decimal(38,24) cast is NOT portable: DuckDB scales through
-            # double*10^24, which can't be correctly rounded past 2^53.)
-            contribs = (
-                e.join(ranks, e["src"] == ranks["node"])
-                .join(outdeg, "src")
-                .select(
-                    "dst",
-                    F.round((F.col("rank_pr") / F.col("outdeg")) * F.lit(1e15))
-                    .cast("bigint")
-                    .alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            ranks = (
-                nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + damping
-                        * F.coalesce(
-                            F.col("in_sum").cast("double") / F.lit(1e15), F.lit(0.0)
-                        )
-                    )
-                    .cast("double")
-                    .alias("rank_pr"),
-                )
-                .persist()
-            )
-            cached.append(ranks)
-        # One eager materialization runs the whole chain; intermediates are
-        # then dropped (checkpoint blocks outlive the cache entries).
-        final = ranks.localCheckpoint()
-        for c in cached:
-            c.unpersist()
-    return final
+    return personalized_pagerank(
+        edges, "true", iterations, damping, src_col, dst_col
+    ).withColumnRenamed("rank_ppr", "rank_pr")
 
 
 def triangle_count(
@@ -320,29 +238,35 @@ def bfs_hops(
     edges: DataFrame, source: str, max_hops: int = 4,
     src_col: str = "src", dst_col: str = "dst",
 ) -> DataFrame:
-    """Breadth-first hop distances from ``source``, fixed ``max_hops``
-    synchronous rounds (engine-replayable like pagerank — no data-dependent
-    convergence test).
+    """Breadth-first hop distances from ``source`` for nodes within
+    ``max_hops`` hops.
 
-    Each round is frontier ⋈ edges → distinct → min-hop fold: all
-    equi-keyed shuffles on the node id, never a cartesian. At 100 TB the
-    round count bounds the work (frontier-delta form would skip settled
-    nodes; at diameter <= max_hops they are equivalent), and lineage stays
-    ``max_hops`` stages deep — short enough to skip checkpointing.
+    Frontier-delta rounds: round k joins only the nodes settled in round
+    k-1 against the edges (all equi-keyed shuffles on the node id, never a
+    cartesian), keeps the arrivals not yet settled, and appends them with
+    hop k. The loop stops when the frontier is empty or after ``max_hops``
+    rounds — the same result the fixed-round min-hop fold (the oracle's
+    unrolled chain) gives at that bound. The only driver scalar per round
+    is ``isEmpty()`` on the frontier. Output: (node, hop).
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .distinct()
+        .localCheckpoint()
+    )
     dist = e.sparkSession.createDataFrame([(source, 0)], "node string, hop int")
-    for k in range(max_hops):
-        frontier = dist.filter(F.col("hop") == k).select(F.col("node").alias("src"))
-        nxt = (
-            frontier.join(e, "src")
+    for k in range(1, max_hops + 1):
+        frontier = dist.filter(F.col("hop") == k - 1)
+        if frontier.isEmpty():
+            break
+        arrivals = (
+            frontier.select(F.col("node").alias("src"))
+            .join(e, "src")
             .select(F.col("dst").alias("node"))
             .distinct()
-            .withColumn("hop", F.lit(k + 1))
+            .join(dist, "node", "left_anti")
         )
-        dist = dist.unionByName(nxt).groupBy("node").agg(F.min("hop").alias("hop"))
+        dist = dist.unionByName(arrivals.withColumn("hop", F.lit(k))).localCheckpoint()
     return dist.select("node", F.col("hop").cast("bigint").alias("hop"))
 
 
@@ -376,17 +300,19 @@ def sssp(
     dst_col: str = "dst",
     weight_col: str = "w",
 ) -> DataFrame:
-    """Single-source shortest paths, ``rounds`` synchronous Bellman-Ford
-    relaxations over a weighted edge list (weights kept as BIGINT so every
-    min-fold is exact — no float tie ambiguity anywhere).
+    """Single-source shortest paths, at most ``rounds`` synchronous
+    Bellman-Ford relaxations over a weighted edge list (weights kept as
+    BIGINT so every min-fold is exact — no float tie ambiguity anywhere).
 
-    Parallel edges collapse to their min weight first. Each round joins the
-    full distance table against the edges (equi-keyed on the node id) and
-    min-folds arrivals; ``rounds`` bounds reachable hop depth exactly like
-    bfs_hops. At 100 TB the delta-frontier refinement (relax only nodes
-    whose distance improved last round) drops per-round work on settled
-    nodes; the fixed-round full relaxation here is the engine-replayable
-    form the oracle can unroll.
+    Parallel edges collapse to their min weight first. Delta-frontier
+    rounds: round r relaxes only the nodes whose distance improved in
+    round r-1 (equi-keyed on the node id) and min-folds the arrivals into
+    the distance table. A node that did not improve already relaxed its
+    out-edges with the same distance, so after r rounds every distance is
+    the min over walks of <= r edges — exactly what r full relaxations
+    (the oracle's unrolled chain) give. The loop stops early once no
+    distance improves; the only driver scalar per round is ``isEmpty()``
+    on the improved set.
 
     Output: (node, dist) for nodes reachable within ``rounds`` hops.
     """
@@ -398,126 +324,33 @@ def sssp(
         )
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
+        .localCheckpoint()
     )
-    dist = e.sparkSession.createDataFrame([(source, 0)], "node string, dist bigint")
-    for _ in range(rounds):
-        relaxed = (
-            dist.withColumnRenamed("node", "src")
+    # rnd = the round in which the node's distance last improved
+    dist = e.sparkSession.createDataFrame(
+        [(source, 0, 0)], "node string, dist bigint, rnd int"
+    )
+    for r in range(1, rounds + 1):
+        improved = dist.filter(F.col("rnd") == r - 1)
+        if improved.isEmpty():
+            break
+        arrivals = (
+            improved.select(F.col("node").alias("src"), "dist")
             .join(e, "src")
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
         )
+        better = F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
         dist = (
-            dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
+            dist.join(arrivals, "node", "full")
+            .select(
+                "node",
+                F.when(better, F.col("cand")).otherwise(F.col("dist")).alias("dist"),
+                F.when(better, F.lit(r)).otherwise(F.col("rnd")).alias("rnd"),
+            )
+            .localCheckpoint()
         )
     return dist.select("node", F.col("dist").cast("bigint").alias("dist"))
-
-
-def bfs_hops_converged(
-    edges: DataFrame,
-    source: str,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    checkpoint_every: int = 3,
-    max_rounds: int = 10_000,
-) -> DataFrame:
-    """Frontier-delta BFS to convergence: loop until the frontier empties
-    instead of a fixed round count — the production form for graphs whose
-    diameter is unknown (:func:`bfs_hops` stays the engine-replayable
-    oracle query; the two agree whenever ``max_hops`` >= diameter).
-
-    Each round joins only the NEWLY discovered frontier against the edges
-    (settled nodes do no work), and every ``checkpoint_every`` rounds the
-    distance table is ``localCheckpoint``-ed so lineage stays shallow on
-    deep graphs. The per-round driver scalar is one count() of the frontier
-    — metadata-scale."""
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    e.persist()
-    try:
-        spark = edges.sparkSession
-        dist = spark.createDataFrame([(source, 0)], "node string, hop int")
-        frontier = dist.select(F.col("node").alias("src"))
-        hop = 0
-        while hop < max_rounds:
-            hop += 1
-            arrivals = frontier.join(e, "src").select(F.col("dst").alias("node")).distinct()
-            new_nodes = arrivals.join(dist, "node", "left_anti").withColumn(
-                "hop", F.lit(hop)
-            )
-            if hop % checkpoint_every == 0:
-                new_nodes = new_nodes.localCheckpoint(eager=True)
-            if new_nodes.isEmpty():
-                break
-            dist = dist.unionByName(new_nodes)
-            if hop % checkpoint_every == 0:
-                dist = dist.localCheckpoint(eager=True)
-            frontier = new_nodes.select(F.col("node").alias("src"))
-        return dist.select("node", F.col("hop").cast("bigint").alias("hop"))
-    finally:
-        e.unpersist()
-
-
-def sssp_converged(
-    edges: DataFrame,
-    source: str,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
-    checkpoint_every: int = 3,
-    max_rounds: int = 10_000,
-) -> DataFrame:
-    """Delta-frontier Bellman-Ford to convergence: relax only nodes whose
-    distance improved last round, stop when no distance improves — the
-    production form whose fixed-round sibling :func:`sssp` is the oracle
-    query (they agree once the round count covers the shortest-path hop
-    depth; pytest pins that equality).
-
-    BIGINT distances keep every min-fold exact. Lineage is truncated with
-    ``localCheckpoint`` every ``checkpoint_every`` rounds; the only
-    driver-side scalar per round is ``isEmpty()`` on the improved set."""
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"),
-            F.col(dst_col).alias("dst"),
-            F.col(weight_col).cast("bigint").alias("w"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-    )
-    e.persist()
-    try:
-        spark = edges.sparkSession
-        dist = spark.createDataFrame([(source, 0)], "node string, dist bigint")
-        improved = dist
-        rnd = 0
-        while rnd < max_rounds:
-            rnd += 1
-            arrivals = (
-                improved.withColumnRenamed("node", "src")
-                .join(e, "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
-            )
-            joined = dist.join(arrivals, "node", "full")
-            improved = joined.filter(
-                F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
-            ).select("node", F.col("cand").alias("dist"))
-            dist = joined.select(
-                "node",
-                F.least(
-                    F.coalesce("dist", F.col("cand")),
-                    F.coalesce("cand", F.col("dist")),
-                ).alias("dist"),
-            )
-            if rnd % checkpoint_every == 0:
-                improved = improved.localCheckpoint(eager=True)
-                dist = dist.localCheckpoint(eager=True)
-            if improved.isEmpty():
-                break
-        return dist.select("node", F.col("dist").cast("bigint").alias("dist"))
-    finally:
-        e.unpersist()
 
 
 def label_propagation(
@@ -848,22 +681,30 @@ def personalized_pagerank(
     """Personalized PageRank: random walk with restart into a SEED SET
     instead of the uniform vector — "importance as seen from these nodes",
     the standard recommendation / trust-propagation variant of
-    :func:`pagerank` (Haveliwala, WWW 2002).
+    :func:`pagerank` (Haveliwala, WWW 2002), which is this function with
+    every node a seed.
 
     ``seed_pred`` is a boolean SQL expression over the column ``node``
     (shared verbatim with the oracle). Init mass 1/|S| on seeds, 0
-    elsewhere; each round redistributes damped mass along out-edges and
-    teleports (1-d)/|S| back into the seeds only. Determinism recipe
-    identical to :func:`pagerank`: scaled-bigint (x1e15) contribution
-    sums, Python-evaluated double constants, fixed iteration count
-    (oracle = unrolled CTE chain). |S| is one metadata-scale driver
-    scalar, like pagerank's node count. Output: (node, rank_ppr).
+    elsewhere; each round ships rank/out_degree along every out-edge, the
+    destination sums arrivals (two keyed shuffles per round, the textbook
+    distributed shape), and (1-d)/|S| teleports back into the seeds only.
+    Contributions accumulate as SCALED BIGINT (x1e15): round(c*1e15) is
+    the same IEEE double product and the same half-up rounding on both
+    engines (positive values), the integer sum is exact under any
+    partial-sum grouping, and per-dst mass <= 1 keeps the scaled sum under
+    2^53 so the cast back to double is lossless. (A decimal(38,24) cast is
+    NOT portable: DuckDB scales through double*10^24, which can't be
+    correctly rounded past 2^53.) Constants are Python-evaluated doubles;
+    the fixed iteration count makes the oracle an unrolled CTE chain. |S|
+    is one metadata-scale driver scalar. Output: (node, rank_ppr).
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    e = e.localCheckpoint()
+    # every edge carries its source's out-degree, materialized once
+    adj = e.join(e.groupBy("src").agg(F.count("*").alias("outdeg")), "src").localCheckpoint()
     nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
+        adj.select(F.col("src").alias("node"))
+        .union(adj.select(F.col("dst").alias("node")))
         .distinct()
         .withColumn("is_seed", F.expr(seed_pred))
         .localCheckpoint()
@@ -872,52 +713,39 @@ def personalized_pagerank(
     if s == 0:
         raise ValueError("seed_pred selects no node")
     base = (1.0 - damping) / s
-    # Fixed-round chain compiled into ONE job (r12) — see _compiled_rounds.
-    with _compiled_rounds(e):
-        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg")).persist()
-        cached = [outdeg]
-        ranks = nodes.select(
-            "node",
-            "is_seed",
-            F.when(F.col("is_seed"), F.lit(1.0 / s))
-            .otherwise(F.lit(0.0))
-            .alias("rank_ppr"),
+    ranks = nodes.select(
+        "node",
+        F.when(F.col("is_seed"), F.lit(1.0 / s)).otherwise(F.lit(0.0)).alias("rank_ppr"),
+    )
+    for _ in range(iterations):
+        contribs = (
+            adj.join(ranks, adj["src"] == ranks["node"])
+            .select(
+                "dst",
+                F.round((F.col("rank_ppr") / F.col("outdeg")) * F.lit(1e15))
+                .cast("bigint")
+                .alias("c"),
+            )
+            .groupBy("dst")
+            .agg(F.sum("c").alias("in_sum"))
         )
-        for _ in range(iterations):
-            contribs = (
-                e.join(ranks, e["src"] == ranks["node"])
-                .join(outdeg, "src")
-                .select(
-                    "dst",
-                    F.round((F.col("rank_ppr") / F.col("outdeg")) * F.lit(1e15))
-                    .cast("bigint")
-                    .alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            ranks = (
-                nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-                .select(
-                    "node",
-                    "is_seed",
-                    (
-                        F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0.0))
-                        + damping
-                        * F.coalesce(
-                            F.col("in_sum").cast("double") / F.lit(1e15), F.lit(0.0)
-                        )
+        ranks = (
+            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
+            .select(
+                "node",
+                (
+                    F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0.0))
+                    + damping
+                    * F.coalesce(
+                        F.col("in_sum").cast("double") / F.lit(1e15), F.lit(0.0)
                     )
-                    .cast("double")
-                    .alias("rank_ppr"),
                 )
-                .persist()
+                .cast("double")
+                .alias("rank_ppr"),
             )
-            cached.append(ranks)
-        final = ranks.localCheckpoint()
-        for c in cached:
-            c.unpersist()
-    return final.select("node", "rank_ppr")
+            .localCheckpoint()
+        )
+    return ranks
 
 
 def oracle_personalized_pagerank(

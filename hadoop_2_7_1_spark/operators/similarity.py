@@ -678,44 +678,49 @@ def kmeans_fit(
     from . import fan_out
 
     emb = fan_out(emb).persist()
-    cand = emb.filter(hex_hash32(F.col(id_col)) % 16 == 0)
-    # degenerate-corpus guard: take(k) on the id column early-terminates as
-    # soon as k gated rows exist — never a full count of the gated subset
-    enough = len(cand.select(id_col).take(k)) >= k
-    src = cand if enough else emb
-    seeds = src.orderBy(id_col).limit(k).select(vec_col).collect()
-    cents = [[float(x) for x in row[0]] for row in seeds]
-    dim = len(cents[0])
-    for _ in range(n_iter):
-        assigned = assign_clusters(emb, cents, vec_col)
-        # Scaled-bigint mean (x1e9): fl(v*1e9) is the same IEEE product and
-        # round() the same half-away rounding on both engines; the integer
-        # sum is exact at any parallelism, so the centroid update — and
-        # therefore every subsequent assignment — is bit-identical to the
-        # oracle's replay. A plain avg(double) drifts in the last ulp with
-        # partial-sum grouping, and the drift compounds across iterations.
-        rows = (
-            assigned.select("cluster", F.posexplode(F.col(vec_col)).alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(
-                (
-                    F.sum(
-                        F.round(F.col("val").cast("double") * F.lit(1e9)).cast("bigint")
-                    ).cast("double")
-                    / F.count("*")
-                    / F.lit(1e9)
-                ).alias("m")
+    try:
+        cand = emb.filter(hex_hash32(F.col(id_col)) % 16 == 0)
+        # degenerate-corpus guard: take(k) on the id column early-terminates as
+        # soon as k gated rows exist — never a full count of the gated subset
+        enough = len(cand.select(id_col).take(k)) >= k
+        src = cand if enough else emb
+        seeds = src.orderBy(id_col).limit(k).select(vec_col).collect()
+        cents = [[float(x) for x in row[0]] for row in seeds]
+        dim = len(cents[0])
+        for _ in range(n_iter):
+            assigned = assign_clusters(emb, cents, vec_col)
+            # Scaled-bigint mean (x1e9): fl(v*1e9) is the same IEEE product and
+            # round() the same half-away rounding on both engines; the integer
+            # sum is exact at any parallelism, so the centroid update — and
+            # therefore every subsequent assignment — is bit-identical to the
+            # oracle's replay. A plain avg(double) drifts in the last ulp with
+            # partial-sum grouping, and the drift compounds across iterations.
+            rows = (
+                assigned.select(
+                    "cluster", F.posexplode(F.col(vec_col)).alias("pos", "val")
+                )
+                .groupBy("cluster", "pos")
+                .agg(
+                    (
+                        F.sum(
+                            F.round(F.col("val").cast("double") * F.lit(1e9))
+                            .cast("bigint")
+                        ).cast("double")
+                        / F.count("*")
+                        / F.lit(1e9)
+                    ).alias("m")
+                )
+                .collect()
             )
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cluster.setdefault(r.cluster, {})[r.pos] = r.m
-        cents = [
-            [by_cluster[c][i] for i in range(dim)] if c in by_cluster else cents[c]
-            for c in range(k)
-        ]
-    emb.unpersist()
+            by_cluster: dict[int, dict[int, float]] = {}
+            for r in rows:
+                by_cluster.setdefault(r.cluster, {})[r.pos] = r.m
+            cents = [
+                [by_cluster[c][i] for i in range(dim)] if c in by_cluster else cents[c]
+                for c in range(k)
+            ]
+    finally:
+        emb.unpersist()
     return cents
 
 
@@ -948,68 +953,73 @@ def pq_fit(
         F.slice(F.col(vec_col), s * sub + 1, sub).alias(f"_s{s}") for s in range(m)
     ]
     base = fan_out(emb).select(F.col(id_col).alias("vec_id"), *slice_cols).persist()
-    cand = base.filter(hex_hash32(F.col("vec_id")) % 16 == 0)
-    # degenerate-corpus guard, once for all subspaces (gate is id-only)
-    enough = len(cand.select("vec_id").take(k)) >= k
-    src = cand if enough else base
-    seed_rows = (
-        src.orderBy("vec_id").limit(k).select(*[f"_s{s}" for s in range(m)]).collect()
-    )
-    books = [[[float(x) for x in row[s]] for row in seed_rows] for s in range(m)]
-    for _ in range(n_iter):
-        assign_cols = []
-        for s in range(m):
-            d = _dists_expr(f"_s{s}", _centroids_sql(books[s]))
-            assign_cols.append(
-                F.expr(
-                    f"cast(array_position({d}, array_min({d})) - 1 as int)"
-                ).alias(f"_c{s}")
-            )
-        assigned = base.select(
-            *[F.col(f"_s{s}") for s in range(m)], *assign_cols
-        )
-        quads = assigned.select(
-            F.explode(
-                F.flatten(
-                    F.array(
-                        *[
-                            F.expr(
-                                f"transform(_s{s}, (v, i) -> struct("
-                                f"{s} as s, _c{s} as cluster, i as pos, "
-                                f"cast(v as double) as val))"
-                            )
-                            for s in range(m)
-                        ]
-                    )
-                )
-            ).alias("q")
-        ).select("q.s", "q.cluster", "q.pos", "q.val")
-        rows = (
-            quads.groupBy("s", "cluster", "pos")
-            .agg(
-                (
-                    F.sum(F.round(F.col("val") * F.lit(1e9)).cast("bigint")).cast(
-                        "double"
-                    )
-                    / F.count("*")
-                    / F.lit(1e9)
-                ).alias("m")
-            )
+    try:
+        cand = base.filter(hex_hash32(F.col("vec_id")) % 16 == 0)
+        # degenerate-corpus guard, once for all subspaces (gate is id-only)
+        enough = len(cand.select("vec_id").take(k)) >= k
+        src = cand if enough else base
+        seed_rows = (
+            src.orderBy("vec_id")
+            .limit(k)
+            .select(*[f"_s{s}" for s in range(m)])
             .collect()
         )
-        by_cell: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            by_cell.setdefault((r.s, r.cluster), {})[r.pos] = r.m
-        books = [
-            [
-                [by_cell[(s, c)][i] for i in range(sub)]
-                if (s, c) in by_cell
-                else books[s][c]
-                for c in range(k)
+        books = [[[float(x) for x in row[s]] for row in seed_rows] for s in range(m)]
+        for _ in range(n_iter):
+            assign_cols = []
+            for s in range(m):
+                d = _dists_expr(f"_s{s}", _centroids_sql(books[s]))
+                assign_cols.append(
+                    F.expr(
+                        f"cast(array_position({d}, array_min({d})) - 1 as int)"
+                    ).alias(f"_c{s}")
+                )
+            assigned = base.select(
+                *[F.col(f"_s{s}") for s in range(m)], *assign_cols
+            )
+            quads = assigned.select(
+                F.explode(
+                    F.flatten(
+                        F.array(
+                            *[
+                                F.expr(
+                                    f"transform(_s{s}, (v, i) -> struct("
+                                    f"{s} as s, _c{s} as cluster, i as pos, "
+                                    f"cast(v as double) as val))"
+                                )
+                                for s in range(m)
+                            ]
+                        )
+                    )
+                ).alias("q")
+            ).select("q.s", "q.cluster", "q.pos", "q.val")
+            rows = (
+                quads.groupBy("s", "cluster", "pos")
+                .agg(
+                    (
+                        F.sum(F.round(F.col("val") * F.lit(1e9)).cast("bigint")).cast(
+                            "double"
+                        )
+                        / F.count("*")
+                        / F.lit(1e9)
+                    ).alias("m")
+                )
+                .collect()
+            )
+            by_cell: dict[tuple[int, int], dict[int, float]] = {}
+            for r in rows:
+                by_cell.setdefault((r.s, r.cluster), {})[r.pos] = r.m
+            books = [
+                [
+                    [by_cell[(s, c)][i] for i in range(sub)]
+                    if (s, c) in by_cell
+                    else books[s][c]
+                    for c in range(k)
+                ]
+                for s in range(m)
             ]
-            for s in range(m)
-        ]
-    base.unpersist()
+    finally:
+        base.unpersist()
     return books
 
 

@@ -1585,28 +1585,31 @@ def train_linear_weights(feats: DataFrame, n_iter: int) -> tuple[list[float], in
     # once (same move at 100 TB: cache the prepared features, train over
     # memory). count() doubles as the materialization action.
     feats = feats.persist()
-    n = feats.count()  # metadata-scale: one long
-    w = [0.0, 0.0, 0.0, 0.0]
-    if n > 0:
-        xs = ("1.0D", "x1", "x2", "x3")
-        for _ in range(n_iter):
-            z = lr_z_expr(w)
-            s = f"(0.5D * (1.0D + {z} / (1.0D + abs({z}))))"
-            row = feats.agg(
-                *[
-                    F.coalesce(
-                        F.sum(
-                            F.expr(
-                                f"cast(round(({x} * (y - {s})) * 1e9) as decimal(38,0))"
-                            )
-                        ),
-                        F.lit(0).cast("decimal(38,0)"),
-                    ).alias(f"s{j}")
-                    for j, x in enumerate(xs)
-                ]
-            ).collect()[0]
-            w = [w[j] + float(row[j]) / n / 1e9 * _LR_LR for j in range(4)]
-    feats.unpersist()
+    try:
+        n = feats.count()  # metadata-scale: one long
+        w = [0.0, 0.0, 0.0, 0.0]
+        if n > 0:
+            xs = ("1.0D", "x1", "x2", "x3")
+            for _ in range(n_iter):
+                z = lr_z_expr(w)
+                s = f"(0.5D * (1.0D + {z} / (1.0D + abs({z}))))"
+                row = feats.agg(
+                    *[
+                        F.coalesce(
+                            F.sum(
+                                F.expr(
+                                    f"cast(round(({x} * (y - {s})) * 1e9)"
+                                    " as decimal(38,0))"
+                                )
+                            ),
+                            F.lit(0).cast("decimal(38,0)"),
+                        ).alias(f"s{j}")
+                        for j, x in enumerate(xs)
+                    ]
+                ).collect()[0]
+                w = [w[j] + float(row[j]) / n / 1e9 * _LR_LR for j in range(4)]
+    finally:
+        feats.unpersist()
     return w, n
 
 

@@ -2779,6 +2779,17 @@ _PR_EDGES_SQL = """
 """
 
 
+def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Engine-side twin of ``_PR_EDGES_SQL``: the undirected supplier<->part
+    co-occurrence graph as a directed edge list holding both directions."""
+    li = load_table(spark, sf_dir, "lineitem")
+    fwd = li.select(
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
+        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
+    )
+    return fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
 @register(
     "grf_pagerank",
     oracle_pagerank(_PR_EDGES_SQL),
@@ -2789,13 +2800,7 @@ _PR_EDGES_SQL = """
 def grf_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return pagerank(edges, iterations=3, damping=0.85)
+    return pagerank(_pr_edges(spark, sf_dir), iterations=3, damping=0.85)
 
 
 _HITS_EDGES_SQL = """
@@ -2837,13 +2842,7 @@ def grf_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bfs_hops
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return bfs_hops(edges, "s1", max_hops=4)
+    return bfs_hops(_pr_edges(spark, sf_dir), "s1", max_hops=4)
 
 
 _SSSP_EDGES_SQL = """
@@ -2899,14 +2898,8 @@ def grf_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import label_propagation
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     return (
-        label_propagation(edges, rounds=3)
+        label_propagation(_pr_edges(spark, sf_dir), rounds=3)
         .groupBy(F.col("label").alias("community"))
         .agg(F.count("*").cast("bigint").alias("n_members"))
     )
@@ -2924,12 +2917,7 @@ def grf_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import label_propagation, modularity
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     labels = label_propagation(edges, rounds=3)
     return modularity(edges, labels)
 
@@ -3008,15 +2996,9 @@ def grf_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "first look at any 100 TB graph before choosing join strategies",
 )
 def grf_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
+    deg = (
+        _pr_edges(spark, sf_dir).distinct().groupBy("src").agg(F.count("*").alias("d"))
     )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     return deg.groupBy(F.col("d").cast("bigint").alias("degree")).agg(
         F.count("*").cast("bigint").alias("n_nodes")
     )
@@ -4842,14 +4824,9 @@ from ..operators.profile import oracle_snapshot_diff
 def grf_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import personalized_pagerank
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     return personalized_pagerank(
-        edges, "node IN ('s1', 's2', 's3')", iterations=3, damping=0.85
+        _pr_edges(spark, sf_dir), "node IN ('s1', 's2', 's3')",
+        iterations=3, damping=0.85,
     )
 
 
@@ -5141,13 +5118,7 @@ from ..operators.funnel import oracle_pareto_tiers
 def grf_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import random_walks
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return random_walks(edges, walk_len=6)
+    return random_walks(_pr_edges(spark, sf_dir), walk_len=6)
 
 
 _RI_SPECS = [
@@ -5305,13 +5276,7 @@ def txt_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import assortativity
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return assortativity(edges)
+    return assortativity(_pr_edges(spark, sf_dir))
 
 
 from ..operators.similarity import oracle_matryoshka_recall
@@ -6542,13 +6507,9 @@ from ..operators.graph import oracle_betweenness_sampled
 def grf_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import betweenness_sampled
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
+    return betweenness_sampled(
+        _pr_edges(spark, sf_dir), ["s1", "s2", "s3", "s4"], depth=4
     )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return betweenness_sampled(edges, ["s1", "s2", "s3", "s4"], depth=4)
 
 
 from ..operators.temporal import oracle_periodogram, oracle_seasonal_anomaly
@@ -6747,13 +6708,9 @@ from ..operators.sampling import oracle_time_split_purged
 def grf_edge_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import edge_betweenness_sampled
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
+    return edge_betweenness_sampled(
+        _pr_edges(spark, sf_dir), ["s1", "s2", "s3", "s4"], depth=4
     )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return edge_betweenness_sampled(edges, ["s1", "s2", "s3", "s4"], depth=4)
 
 
 @register(

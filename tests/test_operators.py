@@ -1595,6 +1595,63 @@ def test_train_linear_filter_deterministic(spark):
     assert full.accuracy > majority
 
 
+@pytest.mark.parametrize(
+    "module, fit, patched, kwargs",
+    [
+        ("textops", "train_linear_weights", "lr_z_expr", {"n_iter": 2}),
+        ("similarity", "kmeans_fit", "assign_clusters", {"k": 4, "n_iter": 2}),
+        ("similarity", "pq_fit", "_dists_expr", {"m": 2, "k": 4, "n_iter": 2, "dim": 4}),
+    ],
+)
+def test_fit_loops_release_cached_frame_on_failure(
+    spark, monkeypatch, module, fit, patched, kwargs
+):
+    """A fit loop that raises mid-iteration must still unpersist the frame
+    it cached — otherwise the blocks stay pinned for the session's life."""
+    import importlib
+
+    mod = importlib.import_module(f"hadoop_2_7_1_spark.operators.{module}")
+    if fit == "train_linear_weights":
+        frame = spark.createDataFrame(
+            [(1.0, 0.1, 0.2, 0.3), (0.0, 0.4, 0.5, 0.6)],
+            "y double, x1 double, x2 double, x3 double",
+        )
+    else:
+        frame = spark.createDataFrame(
+            [(i, [float(i), float(i % 3), 1.0, 0.0]) for i in range(20)],
+            "vec_id bigint, embedding array<float>",
+        )
+
+    def boom(*args, **kw):
+        raise RuntimeError("injected failure")
+
+    monkeypatch.setattr(mod, patched, boom)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(RuntimeError, match="injected failure"):
+        getattr(mod, fit)(frame, **kwargs)
+    leaked = set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    assert not leaked, f"{fit} left persisted RDDs {sorted(leaked)}"
+
+
+def test_operators_never_write_session_conf():
+    """Operators must not write session-global Spark conf: a conf.set inside
+    an operator changes every query sharing the session, including ones
+    running concurrently on other threads."""
+    from pathlib import Path
+
+    import hadoop_2_7_1_spark.operators as ops
+
+    root = Path(ops.__file__).parent
+    writes = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "conf.set(" in line
+    ]
+    assert not writes, writes
+
+
 def test_sssp_hand_checked(spark):
     """Bellman-Ford on a hand-built weighted graph: A->B=5, A->C=2,
     C->B=1, B->D=1 — shortest A->B is 3 (via C), A->D is 4."""
@@ -1610,37 +1667,53 @@ def test_sssp_hand_checked(spark):
 
 
 def test_converged_graph_equals_unrolled(spark):
-    """The while-loop+localCheckpoint production forms converge to the same
-    result as the fixed-round oracle forms once the round count covers the
-    graph: sssp_converged == sssp(rounds>=depth), bfs_hops_converged ==
-    bfs_hops(max_hops>=diameter) — including on a graph with a cycle and a
-    long chain that forces several checkpoint rounds."""
+    """bfs_hops / sssp stop once a round settles or improves nothing:
+    with a bound >= the graph's depth they give the converged answer, and
+    at any bound they equal the fixed-round unrolled oracle chains —
+    on a graph with a cycle, a self-loop and shortcuts that settle some
+    nodes early."""
+    import duckdb
+
     from hadoop_2_7_1_spark.operators.graph import (
         bfs_hops,
-        bfs_hops_converged,
+        oracle_bfs_hops,
+        oracle_sssp,
         sssp,
-        sssp_converged,
     )
 
     # chain A->B->C->D->E->F->G plus shortcuts and a cycle back to A
-    chain = [(chr(65 + i), chr(66 + i), 2) for i in range(6)]
-    edges = spark.createDataFrame(
-        chain + [("A", "D", 9), ("D", "A", 1), ("C", "F", 1), ("G", "G", 5)],
-        "src string, dst string, w long",
+    rows = [(chr(65 + i), chr(66 + i), 2) for i in range(6)]
+    rows += [("A", "D", 9), ("D", "A", 1), ("C", "F", 1), ("G", "G", 5)]
+    edges = spark.createDataFrame(rows, "src string, dst string, w long")
+    edges_sql = "SELECT * FROM (VALUES {}) t(src, dst, w)".format(
+        ", ".join(f"('{a}', '{b}', {w})" for a, b, w in rows)
     )
-    unrolled = {r.node: r.dist for r in sssp(edges, "A", rounds=8).collect()}
-    converged = {
-        r.node: r.dist
-        for r in sssp_converged(edges, "A", checkpoint_every=2).collect()
-    }
-    assert converged == unrolled
-    assert converged["G"] == 7  # A->B(2)->C(2)->F(1)->G(2)
-    bfs_fixed = {r.node: r.hop for r in bfs_hops(edges, "A", max_hops=8).collect()}
-    bfs_conv = {
-        r.node: r.hop
-        for r in bfs_hops_converged(edges, "A", checkpoint_every=2).collect()
-    }
-    assert bfs_conv == bfs_fixed
+
+    def dists(bound):
+        return {r.node: r.dist for r in sssp(edges, "A", rounds=bound).collect()}
+
+    def hops(bound):
+        return {r.node: r.hop for r in bfs_hops(edges, "A", max_hops=bound).collect()}
+
+    converged = dists(8)
+    # A->B(2)->C(2)->F(1)->G(2) beats the chain and the A->D shortcut
+    assert converged == {"A": 0, "B": 2, "C": 4, "D": 6, "E": 8, "F": 5, "G": 7}
+    converged_hops = hops(8)
+    assert converged_hops == {"A": 0, "B": 1, "D": 1, "C": 2, "E": 2, "F": 3, "G": 4}
+    con = duckdb.connect()
+    try:
+        for bound, got, got_hops in (
+            (2, dists(2), hops(2)),
+            (8, converged, converged_hops),
+        ):
+            want = dict(con.sql(oracle_sssp(edges_sql, "A", rounds=bound)).fetchall())
+            assert got == want, bound
+            want_hops = dict(
+                con.sql(oracle_bfs_hops(edges_sql, "A", max_hops=bound)).fetchall()
+            )
+            assert got_hops == want_hops, bound
+    finally:
+        con.close()
 
 
 def test_gap_fill_interpolate_hand_checked(spark):
