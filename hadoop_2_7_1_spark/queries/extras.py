@@ -4701,8 +4701,11 @@ def cur_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY l_returnflag
     """,
     doc="Avro Object Container File as a first-class source/sink "
-        "(sources/avrofile.py: pure-Python OCF writer+reader, deflate "
-        "codec, stock-JVM DataFileReader/Writer round-trips pinned in "
+        "(sources/avrofile.py: mapInArrow writer with a columnar numpy "
+        "encoder, one OCF block per Arrow batch; reader = one task per "
+        "part file indexed by spark.range, no shuffle, one typed Arrow "
+        "batch per OCF block; deflate codec; stock-JVM "
+        "DataFileReader/Writer round-trips pinned in "
         "tests/test_sources.py): lineitem columns round-trip through "
         "deflate avro part files, then a decimal-accumulated aggregate "
         "must hash-match the parquet-direct oracle",

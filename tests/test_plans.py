@@ -156,7 +156,7 @@ def test_registry_wide_plan_audit(spark):
         "src_binary_files",
         "src_webdataset",  # Arrow-batched stdlib tar parse IS the point
         "mm_patch_grid",  # PNG decode + patch tiling IS the Python node
-        "src_avro_roundtrip",  # pure-Python OCF decode IS the point
+        "src_avro_roundtrip",  # OCF encode/decode in MapInArrow IS the point
         "txt_udtf_ngrams",  # the UDTF surface demo IS the Python node
         "q22_pi_qmc",
         "q23_bbp_pi_digits", "bench_teragen", "bench_teragen_gensort",
