@@ -2111,8 +2111,9 @@ def src_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="MapFile round-trip (IO/MapFile.java:59): supplier written as "
         "range-partitioned part-NNNNN/{data,index} MapFiles (one shuffle, "
-        "sorted within part), then index-aware point lookups (seek + <=1 "
-        "interval scan, never a data-file read) — the missing key probes "
+        "sorted within part), then index-aware point lookups (seek, then "
+        "scan to the first key past the target: <=1 index interval on "
+        "sorted data, never a whole data file) — the missing key probes "
         "the not-found path; format pinned by the stock MapFile.Reader "
         "round-trip in tests/test_sources.py",
 )
@@ -2790,6 +2791,16 @@ def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
+def _tri_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Engine-side twin of ``_TRI_EDGES_SQL``: the parts-in-same-order
+    co-occurrence graph, one directed edge per ordered pair of lineitems of
+    one order whose parts differ."""
+    li = load_table(spark, sf_dir, "lineitem")
+    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
+    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
+    return a.join(b, "ok").filter(F.col("src") != F.col("dst")).select("src", "dst")
+
+
 @register(
     "grf_pagerank",
     oracle_pagerank(_PR_EDGES_SQL),
@@ -3336,11 +3347,7 @@ _TRI_EDGES_SQL = """
 def grf_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import triangle_count
 
-    li = load_table(spark, sf_dir, "lineitem")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    edges = a.join(b, "ok").filter(F.col("src") != F.col("dst")).select("src", "dst")
-    return triangle_count(edges)
+    return triangle_count(_tri_edges(spark, sf_dir))
 
 
 @register(
@@ -3357,11 +3364,7 @@ def grf_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore
 
-    li = load_table(spark, sf_dir, "lineitem")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    edges = a.join(b, "ok").filter(F.col("src") != F.col("dst")).select("src", "dst")
-    return kcore(edges, k=3, rounds=4)
+    return kcore(_tri_edges(spark, sf_dir), k=3, rounds=4)
 
 
 @register(
@@ -5670,11 +5673,7 @@ from ..operators.textops import oracle_char_entropy_rate
 def grf_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import clustering_coefficients
 
-    li = load_table(spark, sf_dir, "lineitem")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    edges = a.join(b, "ok").filter(F.col("src") != F.col("dst")).select("src", "dst")
-    return clustering_coefficients(edges)
+    return clustering_coefficients(_tri_edges(spark, sf_dir))
 
 
 @register(

@@ -18,9 +18,12 @@ byte-range ``getSplits``) are possible with the same partition class carrying
 (file, start, end); at file granularity each task decodes a whole stream, so
 the framing never has to resynchronize mid-task.
 
-The decode path is the pure-Python parser from :mod:`.seqfile` (all three
-compression layouts); the write path emits standard v6 streams that stock
-Hadoop readers accept (JVM round-trip pinned in tests/test_sources.py).
+Each task streams its part file through the header reader and record
+iterator of :mod:`.seqfile` (all three compression layouts, sync markers
+checked), never holding the whole file; the write path emits standard
+Text/Text v6 streams that stock Hadoop readers accept (JVM round-trip pinned
+in tests/test_sources.py). Text has no null, so a null key or value fails
+the write with a ``ValueError`` naming the column.
 """
 
 from __future__ import annotations
@@ -38,7 +41,14 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .seqfile import _decode_writable, _enc_text, _parse_seq_stream, _SeqWriter
+from .seqfile import (
+    READ_CHUNK,
+    _SeqWriter,
+    _decode_writable,
+    _enc_text,
+    _read_header,
+    _read_records,
+)
 
 
 class _FilePartition(InputPartition):
@@ -68,13 +78,13 @@ class _SeqFileReader(DataSourceReader):
     def read(self, partition: "_FilePartition"):
         if not partition.path:
             return
-        with open(partition.path, "rb") as fh:
-            buf = fh.read()
-        for key_b, val_b, key_cls, val_cls in _parse_seq_stream(buf):
-            yield (
-                str(_decode_writable(key_cls, key_b)),
-                str(_decode_writable(val_cls, val_b)),
-            )
+        with open(partition.path, "rb", buffering=READ_CHUNK) as fh:
+            header = _read_header(fh)
+            for key_b, val_b in _read_records(fh, header):
+                yield (
+                    str(_decode_writable(header.key_class, key_b)),
+                    str(_decode_writable(header.value_class, val_b)),
+                )
 
 
 class _SeqFileCommit(WriterCommitMessage):
@@ -93,11 +103,12 @@ class _SeqFileWriter(DataSourceWriter):
     never before, so a failed job leaves the old data intact. ``abort``
     removes the staging directory and nothing else."""
 
-    def __init__(self, options, overwrite: bool):
+    def __init__(self, options, overwrite: bool, columns: list[str]):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("pyseqfile: path option/save(path) required")
         self.overwrite = overwrite
+        self.columns = columns
         self.job_id = uuid.uuid4().hex[:8]
         self.staging = os.path.join(self.path, f"_temporary-{self.job_id}")
 
@@ -116,6 +127,12 @@ class _SeqFileWriter(DataSourceWriter):
                 f"pyseqfile:{pid}",
             )
             for row in iterator:
+                for i in (0, 1):
+                    if row[i] is None:
+                        raise ValueError(
+                            f"pyseqfile: column {self.columns[i]!r} holds a null; "
+                            "org.apache.hadoop.io.Text cannot hold one"
+                        )
                 w.append(_enc_text(str(row[0])), _enc_text(str(row[1])))
         return _SeqFileCommit(pid, staged)
 
@@ -152,7 +169,7 @@ class SequenceFileDataSource(DataSource):
         return _SeqFileReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> DataSourceWriter:
-        return _SeqFileWriter(self.options, overwrite)
+        return _SeqFileWriter(self.options, overwrite, schema.fieldNames())
 
 
 def register(spark) -> None:

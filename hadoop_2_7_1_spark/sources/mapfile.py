@@ -10,11 +10,14 @@ MapFileOutputFormat.java) writes ONE MapFile per reducer partition.
 
 Spark-first shape: the write is a range-repartition + within-partition sort
 (one shuffle — the same sort the reference's reduce phase performs), then an
-Arrow-batched ``mapInPandas`` writer emits ``part-NNNNN/{data,index}`` per
+Arrow-batched ``mapInArrow`` writer emits ``part-NNNNN/{data,index}`` per
 partition. At 100 TB the data files stay distributed and block-splittable;
-only index entries (1 per 128 records) and the returned part manifest are
-small. Point lookup reads ONE index file and ONE bounded slice of one data
-file — never a scan.
+only index entries (1 per ``index_interval`` records) and the returned part
+manifest are small. Point lookup reads ONE index file, seeks ONE data file
+and scans forward to the first key past the target — on sorted data at most
+one index interval, whatever interval the file was written with — never the
+whole file. Index and data are read by the SequenceFile reader of
+:mod:`.seqfile` (all three compression layouts, sync markers checked).
 
 Format compatibility is pinned by a stock ``org.apache.hadoop.io.MapFile
 .Reader`` round-trip in tests/test_sources.py.
@@ -24,18 +27,21 @@ from __future__ import annotations
 
 import os
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .seqfile import (
+    READ_CHUNK,
+    _COUNTS_SCHEMA,
     _SeqWriter,
     _WRITABLE_FOR_DTYPE,
+    _counts,
     _decode_writable,
-    _parse_seq_stream,
-    _read_seq_header,
-    read_vlong,
+    _null_column,
+    _raise_on_null,
+    _read_header,
+    _read_records,
 )
 
 #: io.map.index.interval default (MapFile.Writer)
@@ -64,7 +70,8 @@ def write_map_file(
     a point lookup then touches exactly one part (the reference's
     TotalOrderPartitioner + MapFileOutputFormat composition; plain
     MapFileOutputFormat hash-partitions, which also works but makes every
-    reader check one part per hash bucket).
+    reader check one part per hash bucket). A null key or value raises
+    ``ValueError`` naming the column.
     """
     dtypes = dict(df.dtypes)
     key_class, enc_key = _WRITABLE_FOR_DTYPE[dtypes[key_col]]
@@ -80,55 +87,59 @@ def write_map_file(
         .sortWithinPartitions(key_col)
     )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-        from pyspark import TaskContext
-
+    def new_bloom():
         from .bloomfilter import DynamicBloom, vector_size_for
+
+        size = vector_size_for(bloom_num_keys, bloom_error_rate)
+        return DynamicBloom(size, nr=bloom_num_keys)
+
+    def run(batches):
+        from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         part_dir = os.path.join(path, f"part-{pid:05d}")
         data_fh = index_fh = None
         data = index = None
-        bf = (
-            DynamicBloom(
-                vector_size_for(bloom_num_keys, bloom_error_rate),
-                nr=bloom_num_keys,
-            )
-            if bloom
-            else None
-        )
+        bf = new_bloom() if bloom else None
         n = 0
-        for pdf in batches:
-            if data is None:
-                os.makedirs(part_dir, exist_ok=True)
-                data_fh = open(os.path.join(part_dir, "data"), "wb")
-                index_fh = open(os.path.join(part_dir, "index"), "wb")
-                data = _SeqWriter(
-                    data_fh, key_class, value_class, f"mapfile-data:{pid}"
-                )
-                index = _SeqWriter(
-                    index_fh, key_class, _LONG_WRITABLE, f"mapfile-index:{pid}"
-                )
-            for k, v in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-                kb = enc_key(k)
-                if n % index_interval == 0:
-                    # record position BEFORE this append (MapFile.Writer:
-                    # position.set(data.getLength()))
-                    index.append(kb, struct.pack(">q", data_fh.tell()))
-                data.append(kb, enc_value(v))
-                if bf is not None:
-                    bf.add(kb)  # raw serialized key bytes, like bloomKey.set
-                n += 1
-        if data_fh is not None:
-            data_fh.close()
-            index_fh.close()
-            if bf is not None:
-                with open(os.path.join(part_dir, "bloom"), "wb") as fh:
-                    fh.write(bf.to_bytes())
-        yield pd.DataFrame({"part": [pid], "n_records": [n]})
+        try:
+            for batch in batches:
+                bad = _null_column(batch, (0, 1))
+                if bad is not None:
+                    yield _counts(n, bad)
+                    return
+                if data is None:
+                    os.makedirs(part_dir, exist_ok=True)
+                    data_fh = open(os.path.join(part_dir, "data"), "wb")
+                    index_fh = open(os.path.join(part_dir, "index"), "wb")
+                    data = _SeqWriter(
+                        data_fh, key_class, value_class, f"mapfile-data:{pid}"
+                    )
+                    index = _SeqWriter(
+                        index_fh, key_class, _LONG_WRITABLE, f"mapfile-index:{pid}"
+                    )
+                keys, vals = (c.to_pylist() for c in batch.columns)
+                for k, v in zip(keys, vals):
+                    kb = enc_key(k)
+                    if n % index_interval == 0:
+                        # record position BEFORE this append (MapFile.Writer:
+                        # position.set(data.getLength()))
+                        index.append(kb, struct.pack(">q", data_fh.tell()))
+                    data.append(kb, enc_value(v))
+                    if bf is not None:
+                        bf.add(kb)  # raw serialized key bytes, like bloomKey.set
+                    n += 1
+        finally:
+            if data_fh is not None:
+                data_fh.close()
+                index_fh.close()
+        if bf is not None and data is not None:
+            with open(os.path.join(part_dir, "bloom"), "wb") as fh:
+                fh.write(bf.to_bytes())
+        yield _counts(n)
 
-    counts = sel.mapInPandas(run, "part int, n_records long").collect()
+    counts = sel.mapInArrow(run, _COUNTS_SCHEMA).collect()
+    _raise_on_null(counts, {key_col: key_class, value_col: value_class})
     total = sum(r.n_records for r in counts)
     if total == 0:
         # header-only empty MapFile, like MapFile.Writer with no appends
@@ -139,14 +150,8 @@ def write_map_file(
         with open(os.path.join(part_dir, "index"), "wb") as fh:
             _SeqWriter(fh, key_class, _LONG_WRITABLE, "mapfile-index:empty")
         if bloom:
-            from .bloomfilter import DynamicBloom, vector_size_for
-
-            empty = DynamicBloom(
-                vector_size_for(bloom_num_keys, bloom_error_rate),
-                nr=bloom_num_keys,
-            )
             with open(os.path.join(part_dir, "bloom"), "wb") as fh:
-                fh.write(empty.to_bytes())
+                fh.write(new_bloom().to_bytes())
     return total
 
 
@@ -168,20 +173,20 @@ def _norm(key):
     return key.encode("utf-8") if isinstance(key, str) else key
 
 
-def map_file_lookup(path: str, key, index_interval: int = INDEX_INTERVAL):
+def map_file_lookup(path: str, key):
     """Index-aware point lookup (MapFile.Reader.get): binary-search the
-    in-memory index, seek ``data`` at the indexed position, scan forward at
-    most one interval. Reads O(index) + one bounded data slice — never a
-    full data file. Returns the value or None.
+    in-memory index, seek ``data`` at the indexed position, scan forward
+    until the first key past the target. Reads O(index) + one bounded data
+    slice — never a full data file. Returns the value or None.
 
     Driver-side utility by design: a point lookup is metadata-scale; batch
     lookups belong in a join against :func:`read_map_file`.
     """
-    hit = _map_file_probe(path, key, index_interval)
+    hit = _map_file_probe(path, key)
     return hit[1] if hit is not None else None
 
 
-def _map_file_probe(path: str, key, index_interval: int = INDEX_INTERVAL):
+def _map_file_probe(path: str, key):
     """Index-aware probe returning ``(True, value)`` on a hit, else None —
     the hit/value split lets NullWritable-valued containers (SetFile)
     distinguish "present with null value" from "absent"."""
@@ -189,22 +194,23 @@ def _map_file_probe(path: str, key, index_interval: int = INDEX_INTERVAL):
 
     target = _norm(key)
     for part_dir in sorted(glob.glob(os.path.join(path, "part-*"))):
-        hit = _probe_part(part_dir, target, index_interval)
+        hit = _probe_part(part_dir, target)
         if hit is not None:
             return hit
     return None
 
 
-def _probe_part(part_dir: str, target, index_interval: int = INDEX_INTERVAL):
-    """Probe ONE MapFile dir: binary-search its index, scan one interval."""
-    index_path = os.path.join(part_dir, "index")
-    with open(index_path, "rb") as fh:
-        idx_buf = fh.read()  # 1 entry per 128 records: tiny by design
-    entries = []
-    for kb, vb, kcls, _ in _parse_seq_stream(idx_buf):
-        entries.append(
-            (_norm(_decode_writable(kcls, kb)), struct.unpack(">q", vb)[0])
-        )
+def _probe_part(part_dir: str, target):
+    """Probe ONE MapFile dir: binary-search its index, then scan ``data``
+    from the indexed position to the first key >= target. The index holds
+    record starts (NONE/RECORD) or block starts (BLOCK); either way the scan
+    stops by the next indexed key."""
+    with open(os.path.join(part_dir, "index"), "rb", buffering=READ_CHUNK) as fh:
+        header = _read_header(fh)
+        entries = [
+            (_norm(_decode_writable(header.key_class, kb)), struct.unpack(">q", vb)[0])
+            for kb, vb in _read_records(fh, header)
+        ]
     if not entries or target < entries[0][0]:
         return None
     # rightmost indexed key <= target (entries are in key order)
@@ -215,142 +221,16 @@ def _probe_part(part_dir: str, target, index_interval: int = INDEX_INTERVAL):
             lo = mid
         else:
             hi = mid - 1
-    pos = entries[lo][1]
-    return _scan_data_from(
-        os.path.join(part_dir, "data"), pos, target, index_interval
-    )
-
-
-def _scan_data_from(data_path: str, pos: int, target, max_records: int):
-    """Scan up to ``max_records`` framed records starting at ``pos`` for
-    ``target``; reads the file incrementally (64 KiB chunks), not whole.
-
-    Handles NONE and RECORD compression (a stock MapFile.Writer defaults to
-    RECORD: keys stay plain in the framing, each value is its own codec
-    stream). BLOCK-compressed data files have no per-record seek positions —
-    the index points at block starts — so they route to the full-stream
-    parser path instead of this interval scan."""
-    with open(data_path, "rb") as fh:
-        head = fh.read(4096)
-        key_class, value_class, hpos = _read_seq_header(head)
-        val_compressed, block = struct.unpack_from(">??", head, hpos)
-        decompress = None
-        if val_compressed or block:
-            from .seqfile import _decompressor_for
-
-            clen, cpos = read_vlong(head, hpos + 2)
-            decompress = _decompressor_for(head[cpos : cpos + clen].decode())
-        if block:
-            return _scan_block_data(
-                data_path, pos, target, key_class, value_class
-            )
-        fh.seek(pos)
-        state = {"buf": b"", "off": 0}
-
-        def ensure(n: int) -> bool:
-            while len(state["buf"]) - state["off"] < n:
-                chunk = fh.read(65536)
-                if not chunk:
-                    return False
-                state["buf"] = state["buf"][state["off"] :] + chunk
-                state["off"] = 0
-            return True
-
-        seen = 0
-        while seen <= max_records:
-            if not ensure(4):
-                return None
-            (rec_len,) = struct.unpack_from(">i", state["buf"], state["off"])
-            if rec_len == -1:  # sync escape
-                if not ensure(20):
-                    return None
-                state["off"] += 20
-                continue
-            if not ensure(8 + rec_len):
-                return None
-            off = state["off"]
-            (key_len,) = struct.unpack_from(">i", state["buf"], off + 4)
-            kb = state["buf"][off + 8 : off + 8 + key_len]
-            vb = state["buf"][off + 8 + key_len : off + 8 + rec_len]
-            state["off"] = off + 8 + rec_len
-            seen += 1
-            k = _norm(_decode_writable(key_class, kb))
+    with open(os.path.join(part_dir, "data"), "rb", buffering=READ_CHUNK) as fh:
+        header = _read_header(fh)
+        fh.seek(entries[lo][1])
+        for kb, vb in _read_records(fh, header):
+            k = _norm(_decode_writable(header.key_class, kb))
             if k == target:
-                if decompress is not None:
-                    vb = decompress(bytes(vb))
-                return (True, _decode_writable(value_class, vb))
+                return (True, _decode_writable(header.value_class, vb))
             if k > target:  # sorted data: overshot
                 return None
     return None
-
-
-def _scan_block_data(data_path: str, pos: int, target, key_class, value_class):
-    """BLOCK-compressed interval scan: the index position is a block start
-    (sync escape); decode blocks from there until the target key is found or
-    overshot. Blocks are read incrementally in 64 KiB chunks, so a lookup
-    touches one or two blocks of I/O — not the whole file tail."""
-    from .seqfile import _decompressor_for
-
-    with open(data_path, "rb") as fh:
-        head = fh.read(4096)
-        _, _, hpos = _read_seq_header(head)
-        compressed, block = struct.unpack_from(">??", head, hpos)
-        decompress = None
-        if compressed or block:
-            clen, cpos = read_vlong(head, hpos + 2)
-            decompress = _decompressor_for(head[cpos : cpos + clen].decode())
-        fh.seek(pos)
-        buf = b""
-        off = 0
-
-        def ensure(n: int) -> bool:
-            nonlocal buf, off
-            while len(buf) - off < n:
-                chunk = fh.read(65536)
-                if not chunk:
-                    return False
-                buf = buf[off:] + chunk
-                off = 0
-            return True
-
-        while True:
-            if not ensure(4):
-                return None
-            (esc,) = struct.unpack_from(">i", buf, off)
-            if esc != -1:
-                return None  # trailing garbage / truncation
-            off += 4
-            if not ensure(16):
-                return None
-            off += 16  # sync marker
-            try:
-                ensure(10)  # a vlong is at most 9 bytes
-                n_rec, off = read_vlong(buf, off)
-                blobs = []
-                for _ in range(4):
-                    ensure(10)
-                    blen, off = read_vlong(buf, off)
-                    if not ensure(blen):
-                        return None  # truncated block
-                    blobs.append(decompress(buf[off : off + blen]))
-                    off += blen
-            except (struct.error, IndexError, OSError, ValueError):
-                return None
-            key_lens_b, keys_b, val_lens_b, vals_b = blobs
-            kp = vp = klp = vlp = 0
-            for _ in range(n_rec):
-                klen, klp = read_vlong(key_lens_b, klp)
-                vlen, vlp = read_vlong(val_lens_b, vlp)
-                k = _norm(_decode_writable(key_class, keys_b[kp : kp + klen]))
-                if k == target:
-                    return (
-                        True,
-                        _decode_writable(value_class, vals_b[vp : vp + vlen]),
-                    )
-                if k > target:  # sorted data: overshot — stop reading
-                    return None
-                kp += klen
-                vp += vlen
 
 
 # ---------------------------------------------------------------------------
@@ -470,7 +350,7 @@ def write_bloom_map_file(
     )
 
 
-def bloom_map_file_lookup(path: str, key, index_interval: int = INDEX_INTERVAL):
+def bloom_map_file_lookup(path: str, key):
     """BloomMapFile.Reader.get: test the per-part bloom before touching
     index/data; a negative costs one small file read and zero data I/O.
     Parts without a ``bloom`` file degrade to the plain probe
@@ -488,7 +368,7 @@ def bloom_map_file_lookup(path: str, key, index_interval: int = INDEX_INTERVAL):
                 bf = DynamicBloom.from_bytes(fh.read())
             if not bf.test(key_bytes):
                 continue  # definite miss: skip index+data entirely
-        hit = _probe_part(part_dir, target, index_interval)
+        hit = _probe_part(part_dir, target)
         if hit is not None:
             return hit[1]
     return None

@@ -16,22 +16,30 @@ input-format path, so files are block-splittable exactly as in the reference
 (one task per block-aligned split — scales to many-TB inputs the same way
 the reference's ``getSplits`` does).
 
-The DEFAULT write path is an Arrow-batched ``mapInPandas`` writer that
+The DEFAULT write path is an Arrow-batched ``mapInArrow`` writer that
 serializes the SequenceFile v6 format (header, Writable encodings, sync
-markers every SYNC_INTERVAL bytes so files stay splittable) directly from
-pandas batches — no ``df.rdd`` Pyrolite row-at-a-time hop. Correctness is
-pinned by round-tripping through the JVM Hadoop reader in
-tests/test_sources.py. Compressed output still delegates to
-``saveAsSequenceFile`` (the JVM owns the codec implementations).
+markers every SYNC_INTERVAL bytes so files stay splittable) straight from
+each column's Python values: no ``df.rdd`` Pyrolite row-at-a-time hop, and
+no pandas dtype coercion of nullable columns. Correctness is pinned by
+round-tripping through the JVM Hadoop reader in tests/test_sources.py.
+Compressed output still delegates to ``saveAsSequenceFile`` (the JVM owns
+the codec implementations).
+
+Every Python-side read goes through one header reader (:func:`_read_header`)
+and one streaming record iterator (:func:`_read_records`).
 """
 
 from __future__ import annotations
 
+import datetime
+import functools
 import hashlib
+import io
 import os
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -77,16 +85,20 @@ def write_vlong(i: int) -> bytes:
 def read_vlong(buf: bytes, pos: int) -> tuple[int, int]:
     """Inverse of write_vlong → (value, new_pos)."""
     first = struct.unpack_from("b", buf, pos)[0]
-    pos += 1
-    if first >= -112:
-        return first, pos
-    negative = first < -120
-    nbytes = (-120 - first) if negative else (-112 - first)
-    val = 0
-    for _ in range(nbytes):
-        val = (val << 8) | buf[pos]
-        pos += 1
-    return (~val if negative else val), pos
+    size = _vlong_size(buf[pos])
+    if size == 1:
+        return first, pos + 1
+    val = int.from_bytes(buf[pos + 1 : pos + size], "big")
+    return (~val if first < -120 else val), pos + size
+
+
+def _vlong_size(first: int) -> int:
+    """Total bytes of a vlong from its first (unsigned) byte
+    (WritableUtils.decodeVIntSize)."""
+    b = first - 256 if first > 127 else first
+    if b >= -112:
+        return 1
+    return -119 - b if b < -120 else -111 - b
 
 
 def _enc_text(s: str) -> bytes:
@@ -144,13 +156,14 @@ _MAPW_CLASS_IDS = {
 }
 
 
-def _enc_map_text_text(d: dict) -> bytes:
+def _enc_map_text_text(pairs) -> bytes:
     """MapWritable with Text keys and Text values (MapWritable.java:154
     write(): super.write = newClasses byte (0, all ids pre-known), then
-    entry count int, then per entry id-byte + payload for key and value."""
-    out = [struct.pack("b", 0), struct.pack(">i", len(d))]
+    entry count int, then per entry id-byte + payload for key and value).
+    ``pairs`` is one Arrow map value: a list of (key, value) tuples."""
+    out = [struct.pack("b", 0), struct.pack(">i", len(pairs))]
     tid = struct.pack("b", _MAPW_CLASS_IDS["org.apache.hadoop.io.Text"])
-    for k, v in d.items():
+    for k, v in pairs:
         out.append(tid)
         out.append(_enc_text(str(k)))
         out.append(tid)
@@ -158,31 +171,51 @@ def _enc_map_text_text(d: dict) -> bytes:
     return b"".join(out)
 
 
-def _enc_object_writable(v) -> bytes:
+#: Spark SQL dtype → ObjectWritable declared class; every other type is
+#: declared ``java.lang.String`` and written as its ``str`` form.
+_OBJECT_CLASS_FOR_DTYPE = {
+    "boolean": "boolean",
+    "tinyint": "long",
+    "smallint": "long",
+    "int": "long",
+    "bigint": "long",
+    "float": "double",
+    "double": "double",
+    "binary": "org.apache.hadoop.io.BytesWritable",
+}
+
+_NULL_INSTANCE = "org.apache.hadoop.io.ObjectWritable$NullInstance"
+
+
+def _enc_object_writable(declared: str, v) -> bytes:
     """ObjectWritable.java:133 writeObject: UTF declared-class name +
     payload. Java primitives write their boxed wire form; String writes UTF.
     (DataOutput.writeUTF = 2-byte BE length + modified-utf8; plain utf-8 is
     byte-identical for the class names and BMP text we emit.)"""
-    # pandas hands numpy scalars (np.int64/np.bool_/np.float64), which fail
-    # plain isinstance checks against int/bool — unwrap to Python first so
-    # numeric columns don't get mis-tagged as java.lang.String
-    if hasattr(v, "item") and type(v).__module__ == "numpy":
-        v = v.item()
-    if isinstance(v, bool):
-        name, payload = "boolean", struct.pack(">?", v)
-    elif isinstance(v, int):
-        name, payload = "long", struct.pack(">q", v)
-    elif isinstance(v, float):
-        name, payload = "double", struct.pack(">d", v)
-    elif isinstance(v, (bytes, bytearray)):
+    if v is None:
+        # writeObject(out, null, declared) swaps in a NullInstance declared
+        # as Writable; the NullInstance payload is the original declared name
+        return (
+            _utf("org.apache.hadoop.io.Writable") + _utf(_NULL_INSTANCE) + _utf(declared)
+        )
+    if declared == "boolean":
+        payload = struct.pack(">?", v)
+    elif declared == "long":
+        payload = struct.pack(">q", v)
+    elif declared == "double":
+        payload = struct.pack(">d", v)
+    elif declared == "org.apache.hadoop.io.BytesWritable":
         # Writable branch (ObjectWritable.java:133 region): the declared
         # class name is followed by the INSTANCE class name before the
         # payload — stock readFields reads both; one name would misparse.
-        name = "org.apache.hadoop.io.BytesWritable"
-        return _utf(name) + _utf(name) + _enc_bytes(bytes(v))
+        return _utf(declared) + _utf(declared) + _enc_bytes(v)
     else:
-        name, payload = "java.lang.String", _utf(str(v))
-    return _utf(name) + payload
+        if isinstance(v, datetime.datetime):
+            # Arrow hands session-zone-aware datetimes; the text form is
+            # the zone's wall-clock time, without an offset suffix
+            v = v.replace(tzinfo=None)
+        payload = _utf(str(v))
+    return _utf(declared) + payload
 
 
 def _utf(s: str) -> bytes:
@@ -225,6 +258,40 @@ class _SeqWriter:
         self.since_sync += len(rec)
 
 
+#: Per-task result of the Arrow writers: records written, or the name of
+#: the first column found holding a null its Writable class cannot hold.
+_COUNTS_SCHEMA = "n_records long, null_column string"
+
+
+def _counts(n: int, null_column: str = ""):
+    import pyarrow as pa
+
+    return pa.record_batch({"n_records": [n], "null_column": [null_column]})
+
+
+def _null_column(batch, checked) -> str | None:
+    """Name of the first column (by index in ``checked``) of an Arrow batch
+    holding a null, map entries included."""
+    import pyarrow as pa
+
+    for i in checked:
+        col = batch.column(i)
+        if col.null_count or (pa.types.is_map(col.type) and col.items.null_count):
+            return batch.schema.names[i]
+    return None
+
+
+def _raise_on_null(counts, classes: dict[str, str]) -> None:
+    """Driver side of :func:`_null_column`: tasks report the column, the
+    driver raises, so callers see a ``ValueError`` and not a task failure."""
+    for r in counts:
+        if r.null_column:
+            raise ValueError(
+                f"column {r.null_column!r} holds a null; "
+                f"{classes[r.null_column]} cannot hold one"
+            )
+
+
 def write_sequence_file(
     df: DataFrame,
     path: str,
@@ -236,7 +303,7 @@ def write_sequence_file(
     """SequenceFileOutputFormat analogue: write (key, value) columns as a
     SequenceFile; Writable classes are inferred from the column types.
 
-    Default path: Arrow-batched ``mapInPandas`` writer — each partition
+    Default path: Arrow-batched ``mapInArrow`` writer — each partition
     serializes its batches straight to ``path/part-NNNNN`` in SequenceFile
     v6 format (sync markers every SYNC_INTERVAL bytes keep the files
     splittable for any Hadoop reader). No ``df.rdd``/Pyrolite hop.
@@ -244,8 +311,12 @@ def write_sequence_file(
     ``value_kind``:
       - ``auto``: Writable from the column dtype (Text/LongWritable/...)
       - ``map``: value column is ``map<string,string>`` → MapWritable
-      - ``object``: tagged ObjectWritable (class name + payload) from the
-        runtime type
+      - ``object``: tagged ObjectWritable (class name + payload), declared
+        class from the column dtype; nulls are written as the stock
+        ``NullInstance`` form
+
+    Any other null (keys, and values of every kind but ``object``) raises
+    ``ValueError`` naming the column: those Writable classes have no null.
 
     ``codec`` enables compression (SequenceFile.java:228) with one of
     CODECS' short names or a fully-qualified codec class; that path
@@ -259,36 +330,47 @@ def write_sequence_file(
 
     dtypes = dict(df.dtypes)
     key_class, enc_key = _WRITABLE_FOR_DTYPE[dtypes[key_col]]
+    checked = (0, 1)
     if value_kind == "map":
         value_class, enc_value = "org.apache.hadoop.io.MapWritable", _enc_map_text_text
     elif value_kind == "object":
-        value_class, enc_value = "org.apache.hadoop.io.ObjectWritable", _enc_object_writable
+        declared = _OBJECT_CLASS_FOR_DTYPE.get(dtypes[value_col], "java.lang.String")
+        value_class = "org.apache.hadoop.io.ObjectWritable"
+        enc_value = functools.partial(_enc_object_writable, declared)
+        checked = (0,)
     else:
         value_class, enc_value = _WRITABLE_FOR_DTYPE[dtypes[value_col]]
 
     os.makedirs(path, exist_ok=True)
     sel = df.select(key_col, value_col)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def run(batches):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         writer, fh, n = None, None, 0
-        for pdf in batches:
-            if writer is None:
-                fh = open(os.path.join(path, f"part-{pid:05d}"), "wb")
-                writer = _SeqWriter(fh, key_class, value_class, f"hadoop_2_7_1_spark:{pid}")
-            keys = pdf.iloc[:, 0]
-            vals = pdf.iloc[:, 1]
-            for k, v in zip(keys, vals):
-                writer.append(enc_key(k), enc_value(v))
-                n += 1
-        if fh is not None:
-            fh.close()
-        yield pd.DataFrame({"part": [pid], "n_records": [n]})
+        try:
+            for batch in batches:
+                bad = _null_column(batch, checked)
+                if bad is not None:
+                    yield _counts(n, bad)
+                    return
+                if writer is None:
+                    fh = open(os.path.join(path, f"part-{pid:05d}"), "wb")
+                    writer = _SeqWriter(
+                        fh, key_class, value_class, f"hadoop_2_7_1_spark:{pid}"
+                    )
+                keys, vals = (c.to_pylist() for c in batch.columns)
+                for k, v in zip(keys, vals):
+                    writer.append(enc_key(k), enc_value(v))
+                n += batch.num_rows
+        finally:
+            if fh is not None:
+                fh.close()
+        yield _counts(n)
 
-    counts = sel.mapInPandas(run, "part int, n_records long").collect()
+    counts = sel.mapInArrow(run, _COUNTS_SCHEMA).collect()
+    _raise_on_null(counts, {key_col: key_class, value_col: value_class})
     if not any(r.n_records for r in counts):
         # Hadoop's SequenceFileOutputFormat emits header-only part files for
         # empty outputs; match that so readers see a valid (empty) file
@@ -336,11 +418,10 @@ def read_sequence_file(
         local = path[5:] if path.startswith("file:") else path
         parts = sorted(_glob.glob(os.path.join(local, "part-*"))) or [local]
         with open(parts[0], "rb") as fh:
-            head = fh.read(4096)
-        key_class, value_class, _ = _read_seq_header(head)
+            header = _read_header(fh)
         schema = (
-            f"{key_name} {_SPARK_TYPE_FOR_WRITABLE.get(key_class, 'string')}, "
-            f"{value_name} {_SPARK_TYPE_FOR_WRITABLE.get(value_class, 'string')}"
+            f"{key_name} {_SPARK_TYPE_FOR_WRITABLE.get(header.key_class, 'string')}, "
+            f"{value_name} {_SPARK_TYPE_FOR_WRITABLE.get(header.value_class, 'string')}"
         )
         return spark.createDataFrame([], schema)
 
@@ -365,20 +446,15 @@ def read_sequence_file_as_text(
 # format's second, independent implementation for round-trip tests.
 # ---------------------------------------------------------------------------
 
-def _read_seq_header(buf: bytes) -> tuple[str, str, int]:
-    """(key_class, value_class, pos_after_classnames) from a v6 stream."""
-    if buf[:4] != b"SEQ\x06":
-        raise ValueError("not a SequenceFile v6 stream")
-    pos = 4
-    klen, pos = read_vlong(buf, pos)
-    key_class = buf[pos : pos + klen].decode()
-    pos += klen
-    vlen, pos = read_vlong(buf, pos)
-    value_class = buf[pos : pos + vlen].decode()
-    return key_class, value_class, pos + vlen
+class _SeqHeader(NamedTuple):
+    key_class: str
+    value_class: str
+    decompress: Callable[[bytes], bytes] | None  # None: NONE layout
+    block: bool  # BLOCK layout (else RECORD when ``decompress`` is set)
+    sync: bytes  # the 16-byte marker every sync escape must repeat
 
 
-#: Codec class → decompress callable for the Python parser's compressed path
+#: Codec class → decompress callable for the Python reader's compressed path
 #: (SequenceFile.java:197-228 RECORD/BLOCK layouts; codec classes from CODECS).
 def _decompressor_for(codec_class: str):
     import bz2
@@ -393,86 +469,99 @@ def _decompressor_for(codec_class: str):
     raise ValueError(f"python parser: unsupported codec {codec_class}")
 
 
-def _parse_seq_stream(buf: bytes):
-    """Yield (key_bytes, value_bytes, key_class, value_class) records.
+class _Truncated(ValueError):
+    """The stream ended inside a header field or a record."""
 
-    Handles all three layouts of ``IO/SequenceFile.java:197-228``:
-    NONE, RECORD (per-value codec stream after the standard framing), and
-    BLOCK (sync + vint record count + four compressed sub-blocks:
-    key-lengths, keys, value-lengths, values). Truncated streams stop
-    cleanly at the last complete record instead of raising mid-slice
-    (crawl-robustness contract shared with the other parsers)."""
-    key_class, value_class, pos = _read_seq_header(buf)
-    compressed, block = struct.unpack_from(">??", buf, pos)
-    pos += 2
-    decompress = None
-    if compressed or block:
-        clen, pos = read_vlong(buf, pos)
-        codec_class = buf[pos : pos + clen].decode()
-        pos += clen
-        decompress = _decompressor_for(codec_class)
-    (n_meta,) = struct.unpack_from(">i", buf, pos)
-    pos += 4
-    for _ in range(n_meta * 2):
-        slen, pos = read_vlong(buf, pos)
-        pos += slen
-    pos += 16  # sync
 
-    if block:
-        while pos + 4 <= len(buf):
-            (esc,) = struct.unpack_from(">i", buf, pos)
-            if esc != -1:
-                break  # trailing garbage / truncation — stop cleanly
-            pos += 4 + 16  # sync escape + sync marker
-            try:
-                n_rec, pos = read_vlong(buf, pos)
-                blobs = []
-                for _ in range(4):
-                    blen, pos = read_vlong(buf, pos)
-                    if pos + blen > len(buf):
-                        return  # truncated block
-                    blobs.append(decompress(bytes(buf[pos : pos + blen])))
-                    pos += blen
-            except (struct.error, IndexError, OSError, zlib.error, ValueError):
-                return
-            key_lens_b, keys_b, val_lens_b, vals_b = blobs
-            kp = vp = 0
-            klp = vlp = 0
-            for _ in range(n_rec):
-                klen, klp = read_vlong(key_lens_b, klp)
-                vlen, vlp = read_vlong(val_lens_b, vlp)
-                yield (
-                    keys_b[kp : kp + klen],
-                    vals_b[vp : vp + vlen],
-                    key_class,
-                    value_class,
-                )
-                kp += klen
-                vp += vlen
+def _take(fh, n: int) -> bytes:
+    b = fh.read(n)
+    if len(b) != n:
+        raise _Truncated("truncated SequenceFile")
+    return b
+
+
+def _take_vlong(fh) -> int:
+    b = _take(fh, 1)
+    return read_vlong(b + _take(fh, _vlong_size(b[0]) - 1), 0)[0]
+
+
+#: Read buffer for files the Python reader opens: a scan reads 64 KiB
+#: chunks, never a whole file (``open(path, "rb", buffering=READ_CHUNK)``).
+READ_CHUNK = 64 * 1024
+
+
+def _read_header(fh) -> _SeqHeader:
+    """Read a v6 header from the start of binary file object ``fh``, leaving
+    it positioned at the first record. The header is variable-length (the
+    metadata map precedes the sync), so it is read field by field."""
+
+    def text() -> str:
+        return _take(fh, _take_vlong(fh)).decode()
+
+    if _take(fh, 4) != b"SEQ\x06":
+        raise ValueError("not a SequenceFile v6 stream")
+    key_class, value_class = text(), text()
+    compressed, block = struct.unpack(">??", _take(fh, 2))
+    decompress = _decompressor_for(text()) if compressed else None
+    (n_meta,) = struct.unpack(">i", _take(fh, 4))
+    for _ in range(2 * n_meta):
+        text()
+    return _SeqHeader(key_class, value_class, decompress, block, _take(fh, 16))
+
+
+def _read_records(fh, header: _SeqHeader) -> Iterator[tuple[bytes, bytes]]:
+    """Yield ``(key_bytes, value_bytes)`` from the current position of
+    ``fh``: just past the header, or a record, block or sync boundary the
+    caller seeked to. Reads stream through ``fh``'s own buffer.
+
+    Handles all three layouts of ``IO/SequenceFile.java:197-228``: NONE,
+    RECORD (per-value codec stream after the standard framing), and BLOCK
+    (sync + vint record count + four compressed sub-blocks: key-lengths,
+    keys, value-lengths, values). Every sync escape's marker must equal the
+    header's, as in ``SequenceFile.Reader`` ("File is corrupt!"): a mismatch
+    or impossible framing raises ``ValueError``. A stream that ends inside a
+    record stops cleanly at the last complete record (crawl-robustness
+    contract shared with the other parsers)."""
+
+    def take_int() -> int:
+        return struct.unpack(">i", _take(fh, 4))[0]
+
+    def check_sync() -> None:
+        if _take(fh, 16) != header.sync:
+            raise ValueError("corrupt SequenceFile: sync marker mismatch")
+
+    decompress = header.decompress
+    try:
+        if header.block:
+            while True:
+                if take_int() != -1:
+                    raise ValueError("corrupt SequenceFile: block without sync")
+                check_sync()
+                n_rec = _take_vlong(fh)
+                key_lens, keys, val_lens, vals = [
+                    decompress(_take(fh, _take_vlong(fh))) for _ in range(4)
+                ]
+                kp = vp = klp = vlp = 0
+                for _ in range(n_rec):
+                    klen, klp = read_vlong(key_lens, klp)
+                    vlen, vlp = read_vlong(val_lens, vlp)
+                    yield keys[kp : kp + klen], vals[vp : vp + vlen]
+                    kp += klen
+                    vp += vlen
+        else:
+            while True:
+                rec_len = take_int()
+                if rec_len == -1:  # sync escape
+                    check_sync()
+                    continue
+                key_len = take_int()
+                if not 0 <= key_len <= rec_len:
+                    raise ValueError("corrupt SequenceFile: bad record framing")
+                rec = _take(fh, rec_len)
+                vb = rec[key_len:]
+                yield rec[:key_len], decompress(vb) if decompress else vb
+    except _Truncated:
         return
-
-    while pos + 4 <= len(buf):
-        (rec_len,) = struct.unpack_from(">i", buf, pos)
-        pos += 4
-        if rec_len == -1:  # sync escape
-            pos += 16
-            continue
-        if pos + 4 > len(buf):
-            return  # truncated: no room for key_len
-        (key_len,) = struct.unpack_from(">i", buf, pos)
-        pos += 4
-        if rec_len < key_len or key_len < 0 or pos + rec_len > len(buf):
-            return  # truncated / corrupt framing: stop at last full record
-        kb = buf[pos : pos + key_len]
-        pos += key_len
-        vb = buf[pos : pos + rec_len - key_len]
-        pos += rec_len - key_len
-        if compressed:
-            try:
-                vb = decompress(bytes(vb))
-            except (OSError, zlib.error, ValueError):
-                return
-        yield kb, vb, key_class, value_class
 
 
 def _decode_writable(cls: str, b: bytes):
@@ -497,9 +586,14 @@ def _decode_writable(cls: str, b: bytes):
     raise ValueError(f"unsupported writable {cls}")
 
 
-def _decode_object_writable(b: bytes) -> tuple[str, str]:
-    """(declared class, value as string) from ObjectWritable bytes."""
+def _decode_object_writable(b: bytes) -> tuple[str, str | None]:
+    """(declared class, value as string) from ObjectWritable bytes; the
+    value is None for a null (the stock NullInstance form)."""
     name, pos = _read_utf(b, 0)
+    if name == "org.apache.hadoop.io.Writable":
+        instance, pos = _read_utf(b, pos)
+        if instance == _NULL_INSTANCE:
+            return _read_utf(b, pos)[0], None
     if name == "long":
         return name, str(struct.unpack_from(">q", b, pos)[0])
     if name == "double":
@@ -526,8 +620,6 @@ def read_sequence_file_object_values(
     Runs over ``binaryFile`` (one task per file — SequenceFiles written for
     object interchange are many small files, not one giant one; for the
     monolithic case convert JVM-side first)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     files = spark.read.format("binaryFile").load(os.path.join(path, "part-*"))
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -536,8 +628,10 @@ def read_sequence_file_object_values(
         for pdf in batches:
             keys, classes, values = [], [], []
             for content in pdf["content"]:
-                for kb, vb, kcls, _ in _parse_seq_stream(bytes(content)):
-                    keys.append(str(_decode_writable(kcls, kb)))
+                fh = io.BytesIO(content)
+                header = _read_header(fh)
+                for kb, vb in _read_records(fh, header):
+                    keys.append(str(_decode_writable(header.key_class, kb)))
                     cls, sval = _decode_object_writable(vb)
                     classes.append(cls)
                     values.append(sval)

@@ -207,10 +207,10 @@ def test_map_file_lookup_pure_roundtrip(items, interval):
                 data.append(kb, _enc_text(v))
 
         for k, v in items.items():
-            assert mapfile.map_file_lookup(d, k, index_interval=interval) == v
+            assert mapfile.map_file_lookup(d, k) == v
         probe = "\x00__absent__"
         if probe not in items:
-            assert mapfile.map_file_lookup(d, probe, index_interval=interval) is None
+            assert mapfile.map_file_lookup(d, probe) is None
 
 
 @given(

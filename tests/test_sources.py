@@ -618,9 +618,12 @@ def test_sequence_file_python_parser_record_compressed(spark, tmp_path):
 
     recs = {}
     for part in sorted(glob.glob(out + "/part-*")):
-        buf = open(part, "rb").read()
-        for kb, vb, kcls, vcls in seqfile._parse_seq_stream(buf):
-            recs[seqfile._decode_writable(kcls, kb)] = seqfile._decode_writable(vcls, vb)
+        with open(part, "rb") as fh:
+            h = seqfile._read_header(fh)
+            for kb, vb in seqfile._read_records(fh, h):
+                recs[seqfile._decode_writable(h.key_class, kb)] = (
+                    seqfile._decode_writable(h.value_class, vb)
+                )
     assert len(recs) == 200
     assert recs[7] == "value-7" * 3
     assert recs[199] == "value-199" * 3
@@ -650,11 +653,12 @@ def test_sequence_file_python_parser_block_compressed(spark, tmp_path):
         )
     writer.close()
 
-    buf = open(path, "rb").read()
-    recs = {
-        seqfile._decode_writable(kcls, kb): seqfile._decode_writable(vcls, vb)
-        for kb, vb, kcls, vcls in seqfile._parse_seq_stream(buf)
-    }
+    with open(path, "rb") as fh:
+        h = seqfile._read_header(fh)
+        recs = {
+            seqfile._decode_writable(h.key_class, kb): seqfile._decode_writable(h.value_class, vb)
+            for kb, vb in seqfile._read_records(fh, h)
+        }
     assert len(recs) == 500
     assert recs["k0000"] == "v-0" * 5
     assert recs["k0499"] == "v-499" * 5
@@ -666,16 +670,22 @@ def test_sequence_file_python_parser_truncated_stream(spark, tmp_path):
     shared with the other parsers)."""
     from hadoop_2_7_1_spark.sources import seqfile
     import glob
+    import io
 
     df = spark.createDataFrame([(i, f"payload-{i:03d}") for i in range(50)], ["k", "v"])
     out = str(tmp_path / "seqtrunc")
     seqfile.write_sequence_file(df, out, "k", "v")
     part = sorted(glob.glob(out + "/part-*"))[-1]
     buf = open(part, "rb").read()
-    full = list(seqfile._parse_seq_stream(buf))
+
+    def parse(b):
+        fh = io.BytesIO(b)
+        return list(seqfile._read_records(fh, seqfile._read_header(fh)))
+
+    full = parse(buf)
     assert full
 
-    cut = list(seqfile._parse_seq_stream(buf[: len(buf) - 7]))
+    cut = parse(buf[: len(buf) - 7])
     assert len(cut) == len(full) - 1
     assert [k for k, *_ in cut] == [k for k, *_ in full[:-1]]
 
@@ -741,6 +751,186 @@ def test_map_file_bigint_keys(spark, tmp_path):
     mapfile.write_map_file(df, out, "k", "v", num_parts=2)
     assert mapfile.map_file_lookup(out, 7 * 123) == "v123"
     assert mapfile.map_file_lookup(out, 5) is None
+
+
+def test_map_file_lookup_any_index_interval(spark, tmp_path):
+    """Lookups scan to the first key past the target (MapFile.Reader.get),
+    so a file written with a wider index interval than the default 128 still
+    answers for every key — MapFile and SetFile alike."""
+    from hadoop_2_7_1_spark.sources import mapfile
+
+    df = spark.createDataFrame(
+        [(f"k{i:05d}", f"v{i}") for i in range(1000)], ["k", "v"]
+    )
+    probes = (0, 129, 300, 511, 512, 999)
+    out = str(tmp_path / "mapfile_iv512")
+    mapfile.write_map_file(df, out, "k", "v", num_parts=1, index_interval=512)
+    assert {p: mapfile.map_file_lookup(out, f"k{p:05d}") for p in probes} == {
+        p: f"v{p}" for p in probes
+    }
+    assert mapfile.map_file_lookup(out, "k00300x") is None
+
+    sout = str(tmp_path / "setfile_iv512")
+    mapfile.write_set_file(df, sout, "k", num_parts=1, index_interval=512)
+    assert all(mapfile.set_file_contains(sout, f"k{p:05d}") for p in probes)
+    assert not mapfile.set_file_contains(sout, "k00300x")
+
+
+def test_map_file_lookup_reads_bounded_slice(spark, tmp_path, monkeypatch):
+    """A point lookup reads the index and one interval of ``data`` — never
+    the whole data file: bytes read from a >1 MB data file stay < 256 KiB."""
+    import builtins
+
+    from hadoop_2_7_1_spark.sources import mapfile
+
+    df = spark.range(20000).selectExpr(
+        "format_string('k%06d', id) AS k", "repeat('x', 50) AS v"
+    )
+    out = str(tmp_path / "mapfile_big")
+    mapfile.write_map_file(df, out, "k", "v", num_parts=1)
+    data_path = os.path.join(out, "part-00000", "data")
+    assert os.path.getsize(data_path) > 1 << 20
+
+    read = {"bytes": 0}
+    real_open = builtins.open
+
+    class Counting:
+        def __init__(self, fh):
+            self._fh = fh
+
+        def read(self, n=-1):
+            b = self._fh.read(n)
+            read["bytes"] += len(b)
+            return b
+
+        def __getattr__(self, name):
+            return getattr(self._fh, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._fh.close()
+
+    def counting_open(file, *args, **kwargs):
+        fh = real_open(file, *args, **kwargs)
+        return Counting(fh) if os.path.basename(str(file)) == "data" else fh
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    try:
+        for probe in (0, 10000, 19999):
+            read["bytes"] = 0
+            assert mapfile.map_file_lookup(out, f"k{probe:06d}") == "x" * 50
+            assert 0 < read["bytes"] < 256 * 1024, (probe, read["bytes"])
+    finally:
+        monkeypatch.undo()
+
+
+def test_sequence_file_nullable_bigint_object_values(spark, tmp_path):
+    """A nullable bigint ObjectWritable column keeps every value exact and
+    writes the null in the stock NullInstance form: read back by the Python
+    reader and by stock ObjectWritable.readFields."""
+    from hadoop_2_7_1_spark.sources import seqfile
+    import glob
+
+    df = spark.createDataFrame(
+        [(1, 2**53 + 1), (2, None), (3, 5)], "k long, v long"
+    ).coalesce(1)
+    out = str(tmp_path / "seqobjnull")
+    seqfile.write_sequence_file(df, out, "k", "v", value_kind="object")
+
+    rows = seqfile.read_sequence_file_object_values(spark, out).collect()
+    assert sorted((r.key, r.value_class, r.value) for r in rows) == [
+        ("1", "long", "9007199254740993"),
+        ("2", "long", None),
+        ("3", "long", "5"),
+    ]
+
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    got = {}
+    for part in sorted(glob.glob(out + "/part-*")):
+        reader = jvm.org.apache.hadoop.io.SequenceFile.Reader(
+            fs, jvm.org.apache.hadoop.fs.Path(part), conf
+        )
+        key = jvm.org.apache.hadoop.io.LongWritable()
+        val = jvm.org.apache.hadoop.io.ObjectWritable()
+        val.setConf(conf)
+        while reader.next(key, val):
+            got[key.get()] = (val.getDeclaredClass().getName(), val.get())
+        reader.close()
+    assert got == {1: ("long", 2**53 + 1), 2: ("long", None), 3: ("long", 5)}
+
+
+def test_writers_reject_nulls_writables_cannot_hold(spark, tmp_path):
+    """Text/LongWritable/... have no null: every Python writer raises a
+    ValueError naming the column instead of writing NaN, "None" or failing
+    mid-task."""
+    import pytest
+    from pyspark.errors.exceptions.captured import PythonException
+
+    from hadoop_2_7_1_spark.sources import dsv2, mapfile, seqfile
+
+    df = spark.createDataFrame([(1, "a"), (2, None)], "k long, v string")
+    with pytest.raises(ValueError, match="'v'.*Text"):
+        seqfile.write_sequence_file(df, str(tmp_path / "seq_null"), "k", "v")
+    nk = spark.createDataFrame([(None, 1.5), (2, 2.5)], "k long, v double")
+    with pytest.raises(ValueError, match="'k'.*LongWritable"):
+        seqfile.write_sequence_file(nk, str(tmp_path / "seq_nullkey"), "k", "v")
+    nm = spark.createDataFrame([(1, {"a": None})], "k long, v map<string,string>")
+    with pytest.raises(ValueError, match="'v'.*MapWritable"):
+        seqfile.write_sequence_file(nm, str(tmp_path / "seq_nullmap"), "k", "v", value_kind="map")
+    with pytest.raises(ValueError, match="'v'.*Text"):
+        mapfile.write_map_file(df, str(tmp_path / "map_null"), "k", "v")
+
+    dsv2.register(spark)
+    pairs = spark.createDataFrame([("a", None)], "key string, value string")
+    # DSv2 writes run in a Python worker: the task's ValueError arrives wrapped
+    with pytest.raises(PythonException, match="ValueError: pyseqfile: column 'value'"):
+        pairs.write.format("pyseqfile").mode("overwrite").save(
+            str(tmp_path / "pyseq_null")
+        )
+
+
+def test_sequence_file_corrupt_sync_marker_raises(spark, tmp_path):
+    """SequenceFile.Reader throws "File is corrupt!" when a sync escape's
+    16 bytes differ from the header's sync; so does our reader — on a full
+    parse and on a MapFile lookup that scans across the marker."""
+    from hadoop_2_7_1_spark.sources import mapfile, seqfile
+    import glob
+    import io
+
+    import pytest
+
+    def corrupt_mid_sync(path):
+        buf = bytearray(open(path, "rb").read())
+        fh = io.BytesIO(bytes(buf))
+        header = seqfile._read_header(fh)
+        pos = buf.index(b"\xff\xff\xff\xff" + header.sync, fh.tell())
+        buf[pos + 4 + 7] ^= 0xFF
+        with open(path, "wb") as out:
+            out.write(buf)
+        return bytes(buf)
+
+    df = spark.createDataFrame(
+        [(i, f"payload-{i:04d}") for i in range(500)], ["k", "v"]
+    ).coalesce(1)
+    out = str(tmp_path / "seqsync")
+    seqfile.write_sequence_file(df, out, "k", "v")
+    buf = corrupt_mid_sync(sorted(glob.glob(out + "/part-*"))[0])
+    fh = io.BytesIO(buf)
+    header = seqfile._read_header(fh)
+    with pytest.raises(ValueError, match="sync"):
+        list(seqfile._read_records(fh, header))
+
+    # one index entry (interval > rows): every lookup scans from record 0
+    mout = str(tmp_path / "mapsync")
+    mapfile.write_map_file(df, mout, "k", "v", num_parts=1, index_interval=1000)
+    corrupt_mid_sync(os.path.join(mout, "part-00000", "data"))
+    assert mapfile.map_file_lookup(mout, 0) == "payload-0000"
+    with pytest.raises(ValueError, match="sync"):
+        mapfile.map_file_lookup(mout, 499)
 
 
 def test_distcp_diff_snapshot_sync(spark, tmp_path):
@@ -1032,32 +1222,35 @@ def test_bloom_map_file_jvm_bidirectional(spark, tmp_path):
 
 def test_map_file_lookup_on_jvm_block_compressed(spark, tmp_path):
     """A stock MapFile.Writer with BLOCK compression: our index-aware lookup
-    must decode from the block boundary the index points at."""
+    must decode from the block boundary the index points at. RECORD (one
+    codec stream per value) and NONE data files are the same lookup's other
+    inputs."""
     from hadoop_2_7_1_spark.sources import mapfile
 
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf)
-    jdir = str(tmp_path / "jvm_block")
     SF = jvm.org.apache.hadoop.io.SequenceFile
-    writer = jvm.org.apache.hadoop.io.MapFile.Writer(
-        conf, fs, jdir,
-        jvm.java.lang.Class.forName("org.apache.hadoop.io.Text"),
-        jvm.java.lang.Class.forName("org.apache.hadoop.io.Text"),
-        SF.CompressionType.BLOCK,
-    )
-    for i in range(400):
-        writer.append(
-            jvm.org.apache.hadoop.io.Text(f"b{i:04d}"),
-            jvm.org.apache.hadoop.io.Text(f"blockval-{i}"),
+    for ctype in ("BLOCK", "RECORD", "NONE"):
+        jdir = str(tmp_path / f"jvm_{ctype}")
+        writer = jvm.org.apache.hadoop.io.MapFile.Writer(
+            conf, fs, jdir,
+            jvm.java.lang.Class.forName("org.apache.hadoop.io.Text"),
+            jvm.java.lang.Class.forName("org.apache.hadoop.io.Text"),
+            getattr(SF.CompressionType, ctype),
         )
-    writer.close()
-    parts_root = str(tmp_path / "jvm_block_parts")
-    os.makedirs(parts_root)
-    os.rename(jdir, os.path.join(parts_root, "part-00000"))
-    for probe in (0, 127, 128, 200, 399):
-        assert mapfile.map_file_lookup(parts_root, f"b{probe:04d}") == f"blockval-{probe}"
-    assert mapfile.map_file_lookup(parts_root, "b9999") is None
+        for i in range(400):
+            writer.append(
+                jvm.org.apache.hadoop.io.Text(f"b{i:04d}"),
+                jvm.org.apache.hadoop.io.Text(f"blockval-{i}"),
+            )
+        writer.close()
+        parts_root = str(tmp_path / f"jvm_{ctype}_parts")
+        os.makedirs(parts_root)
+        os.rename(jdir, os.path.join(parts_root, "part-00000"))
+        for probe in (0, 127, 128, 200, 399):
+            assert mapfile.map_file_lookup(parts_root, f"b{probe:04d}") == f"blockval-{probe}"
+        assert mapfile.map_file_lookup(parts_root, "b9999") is None
 
 
 def test_dynamic_bloom_pure_python():
